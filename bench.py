@@ -449,21 +449,20 @@ LOAD_BOUND = 5.0  # SCALING.md noise protocol: only loadavg ≤5 counts
 def pregel_tax_bench(spark, sf_dir: str) -> dict:
     """Like-for-like harness-tax measurement (round 8). The in-list
     pairs are only like-for-like where BOTH sides run their loop fresh
-    (hits/kcore/bfs/sssp); for pagerank, LPA and CC the declared
-    bespoke query returns a session-cached MV (0.01-0.08s) while the
-    pregel twin reruns its loop — that pairing measures caching, not
-    the harness. This section times the three asymmetric pairs fresh,
-    single run each, same inputs, and reports seconds per side."""
-    from page_rank_hadoop_spark.operators import dedup, graph, pagerank
+    (hits/kcore/bfs/sssp); for LPA and CC the declared bespoke query
+    returns a session-cached MV (0.01-0.08s) while the pregel twin
+    reruns its loop — that pairing measures caching, not the harness.
+    This section times those two pairs fresh, single run each, same
+    inputs, and reports seconds per side. (PageRank has one loop, the
+    harness, so it has no pair.)"""
+    from page_rank_hadoop_spark.operators import dedup, graph
     from page_rank_hadoop_spark.operators.pregel import (
         components_pregel,
         label_propagation_pregel,
-        pagerank_pregel,
     )
     from page_rank_hadoop_spark.plans import registry
     from pyspark.sql import functions as F
 
-    adj = registry._adjacency(spark, sf_dir)
     kept = registry._graph(spark, sf_dir)["kept"]
     pair_edges = registry._minhash_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -475,10 +474,6 @@ def pregel_tax_bench(spark, sf_dir: str) -> dict:
         return round(time.perf_counter() - t0, 3)
 
     out = {
-        "pagerank10": {
-            "bespoke": t(lambda: pagerank.run_pagerank(adj, fixed_iterations=10).ranks),
-            "pregel": t(lambda: pagerank_pregel(adj, n_iter=10)),
-        },
         "lpa3": {
             "bespoke": t(lambda: graph.label_propagation(kept, n_iter=3)),
             "pregel": t(lambda: label_propagation_pregel(kept, n_iter=3)),

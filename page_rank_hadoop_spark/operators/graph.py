@@ -311,11 +311,7 @@ def deterministic_walks(
     return out
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 8,
-    shuffle_partitions: int | str | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, n_iter: int = 8) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) over a directed edge list:
     ``n_iter`` synchronous rounds of  a(v) = Σ_{w→v} h(w),
     h(v) = Σ_{v→w} a(w),  each L1-normalized — the other classic
@@ -349,39 +345,15 @@ def hits(
         return nodes.select(
             "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
-    # Loop-scoped shuffle partitions (round 9b, same lever as pregel /
-    # run_pagerank) — OFF by default here, measured not to pay: unlike
-    # the pagerank loops (pin 3.6s vs 6.7s bespoke, 5.6s vs 8.2s pregel
-    # at sf0.1), this loop's per-round mass first() already materializes
-    # a constant-size plan, and the relay's extra repartition+persist
-    # costs more than the saved empty tasks (pin 4.6s vs 4.3s unpinned).
-    # The knob stays for denser graphs where the calculus flips.
-    spark = e.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        loop_parts = min(session_parts, max(4, max(n, e.count()) // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = session_parts
-    pinned = loop_parts != session_parts
-    if pinned:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        relaid = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        relaid.count()
-        e.unpersist()
-        e = relaid
     try:
         return _hits_loop(e, nodes, n, n_iter)
     finally:
-        if pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
         e.unpersist()
 
 
 def _hits_loop(e: DataFrame, nodes: DataFrame, n: int, n_iter: int) -> DataFrame:
-    """The HITS rounds proper (see ``hits``, whose shuffle-partition pin
-    and edge-cache cleanup wrap this).
+    """The HITS rounds proper (see ``hits``, whose edge-cache cleanup
+    wraps this).
 
     Round 11 fusion (guide §2.4, one exchange instead of two): both
     update directions ride ONE tagged symmetric edge table — edge

@@ -1,4 +1,5 @@
-"""Iterative PageRank with the reference's exact policy, Spark-native.
+"""Iterative PageRank with the reference's exact policy, as a vertex
+program over the one superstep loop (``pregel.pregel``).
 
 Reference (/root/reference/src/main/scala/pageRank.scala):
 - formula  pr' = α·(1/N) + (1−α)·Σ contribs, α = 0.15 (:294, :310)
@@ -15,22 +16,9 @@ Reference (/root/reference/src/main/scala/pageRank.scala):
   in SQL).
 - N counts every adjacency row including the virtual NULL node (:258).
 
-Physical hygiene (SURVEY.md §7 hard-part 1): the reference wrote a
-SequenceFile per iteration, which implicitly truncated lineage. In Spark an
-unpersisted loop builds an O(iterations)-deep plan → re-execution blowup.
-Each iteration persists its ranks, unpersists the predecessor, and
-``localCheckpoint``s every ``checkpoint_every`` iterations to cut lineage.
-Catalyst re-analyzes the full lineage each iteration even when every level
-is persisted (measured: per-iteration latency grows ~1s → 95s by iteration
-10 without checkpoints at sf0.1), so the checkpoint cadence trades RDD
-materialization cost against superlinear plan-analysis cost; every-3 is
-the measured optimum (5.5s vs 6.4s for every-5 at sf0.1, 10 iterations).
-The adjacency table is repartitioned by id ONCE, persisted, and reused
-every iteration, so the per-iteration join never reshuffles the big side:
-the executed one-iteration plan has exactly ONE Exchange (the contribs
-gather groupBy) — the scatter join feeds off the id-partitioned cache and
-the rank-update join aligns adj(id) with contribs(id) shuffle-free
-(pinned in tools/plan_audit.py).
+The loop's physical invariants (one message Exchange per round, one
+action per round, 6dp-absorbed float-sum reordering) are the harness's;
+see ``pregel``.
 """
 
 from __future__ import annotations
@@ -39,7 +27,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from page_rank_hadoop_spark.operators.pregel import pregel
 
 ALPHA = 0.15  # pageRank.scala:294
 
@@ -58,18 +47,21 @@ def run_pagerank(
     max_iter: int = 50,
     tol: float = 0.2,
     fixed_iterations: int | None = None,
-    checkpoint_every: int = 3,
     teleport: DataFrame | None = None,
     initial_ranks: DataFrame | None = None,
-    shuffle_partitions: int | str | None = "auto",
-    eager_checkpoint: bool = True,
 ) -> PageRankResult:
     """Iterate PageRank over an adjacency DataFrame ``(id, links)``.
 
+    Vertices carry ``(pr, out_deg)``; each superstep sends pr/out_deg
+    along the exploded links, sums per recipient, and damps:
+    pr' = α·t + (1−α)·Σ contribs with t = 1/N. Dangling vertices (empty
+    or NULL links) send nothing; contributions to ids outside ``adj``
+    are dropped.
+
     ``fixed_iterations`` overrides the convergence policy (the declared
     oracle query runs exactly 10 for determinism). With the policy active,
-    each iteration costs one extra tiny agg action for avgChange — the
-    Spark analog of the reference's counter read (pageRank.scala:366-371).
+    each iteration's one action also returns Σ|Δpr| — the Spark analog of
+    the reference's counter read (pageRank.scala:366-371).
 
     DELIBERATE METRIC DEVIATION from the reference: our avg_change is the
     true mean |Δpr| between consecutive iterations. The reference's
@@ -87,207 +79,87 @@ def run_pagerank(
 
     ``teleport`` switches to PERSONALIZED PageRank: a DataFrame of source
     ``id`` rows; the restart distribution becomes uniform over that set
-    (t(v) = 1/|S| for v∈S, else 0) instead of 1/N, and ranks initialize
-    to t — random-walk-with-restart relevance to the source set, the
-    standard seed-biased ranking (Haveliwala, "Topic-Sensitive
-    PageRank"). The teleport table is tiny: it broadcasts into the
-    update join, so the loop's physical shape (ONE Exchange per
-    iteration) is unchanged.
+    (t(v) = 1/|S| for v∈S present in the graph, else 0) instead of 1/N,
+    and ranks initialize to t — random-walk-with-restart relevance to the
+    source set (Haveliwala, "Topic-Sensitive PageRank"). t rides along as
+    vertex state.
 
-    ``initial_ranks`` (round 7) WARM-STARTS the loop from a stored
-    ranks table instead of uniform 1.0 — the incremental-recompute
-    path: a daily link-graph refresh re-ranks from yesterday's stored
-    ranks and converges in a few iterations instead of 10-50 (the
-    iteration chain is identical to continuing the original run, so
-    resume(10-iter ranks, 2) ≡ a straight 12-iteration run —
-    hash-checked as q_pagerank_resume against a 12-round unrolled
-    oracle). Vertices added by the refresh and absent from the stored
-    ranks enter at rank 0 (they earn mass on the first resumed
-    iteration); mutually exclusive with ``teleport``.
+    ``initial_ranks`` WARM-STARTS the loop from a stored ranks table
+    instead of uniform 1.0 — the incremental-recompute path: resuming
+    2 iterations from the 10-iteration ranks equals a straight
+    12-iteration run (hash-checked as q_pagerank_resume). Vertices absent
+    from the stored ranks enter at rank 0 and earn mass on the first
+    resumed iteration; mutually exclusive with ``teleport``.
     """
     if teleport is not None and initial_ranks is not None:
         raise ValueError("run_pagerank: teleport and initial_ranks are exclusive")
-    # Pre-partition the adjacency by id ONCE and persist our own copy:
-    # every per-iteration join then reshuffles only the small ranks side
-    # (the contribs aggregate), never the big adjacency. Persisting a fresh
-    # repartitioned DataFrame (instead of the caller's) also keeps hands
-    # off any caller-owned cache — run_pagerank previously persisted and
-    # then unpersisted the caller's adj, silently evicting the shared
-    # graph cache (the 'already cached' warning in round-1 bench logs).
-    # Loop-scoped shuffle partitions (round 9b — the pregel() lever
-    # applied to the bespoke loop): each iteration re-plans with the
-    # static session spark.sql.shuffle.partitions and localCheckpoint
-    # freezes it, so on a small graph rounds × partitions empty tasks
-    # are pure scheduling overhead. 'auto' sizes ~50k rows/partition
-    # (floor 4, capped at the session setting — a 100 TB adjacency
-    # keeps cluster-sized exchanges). Float-sum reorder is absorbed by
-    # the declared 6dp rounding — the same tolerance that already
-    # absorbs DuckDB-vs-Spark summation order (validated across SFs ×
-    # repeats; SCALING.md round-9b).
-    #
-    # Round 10 (judge r9 item 5 — the q_pagerank_resume regression):
-    # sizing needs n BEFORE the partitioning choice, and 9b got it by
-    # persisting at session width first and RE-LAYING when pinned —
-    # a second repartition+persist+count whose ~0.6s constant cost
-    # dominated the 2-iteration resume query. Now n comes from the
-    # caller's frame (the adjacency MV is persisted in every hot path,
-    # so this is a cached scan) and the single persist repartitions to
-    # an EXPLICIT partition count — conf-independent, so the join stays
-    # side-aligned (ONE Exchange per iteration — plan audit unchanged)
-    # with exactly one persist either way.
-    spark = adj.sparkSession
     n = adj.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        loop_parts = min(session_parts, max(4, n // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = None
-    pinned = loop_parts is not None and loop_parts != session_parts
-    target_parts = loop_parts if loop_parts is not None else session_parts
-    adj = adj.repartition(target_parts, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()  # materialize the persist
-    if pinned:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        return _run_pagerank_loop(
-            adj, n, alpha, min_iter, max_iter, tol, fixed_iterations,
-            checkpoint_every, teleport, initial_ranks, eager_checkpoint,
-        )
-    finally:
-        if pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-
-
-def _run_pagerank_loop(
-    adj, n, alpha, min_iter, max_iter, tol, fixed_iterations,
-    checkpoint_every, teleport, initial_ranks, eager_checkpoint=False,
-) -> PageRankResult:
-    """The iteration loop proper — split out so the shuffle-partition
-    pin is restored exception-safely without indenting the loop."""
+    verts = adj.select("id", F.size("links").cast("double").alias("out_deg"))
     if teleport is not None:
-        # Restart mass is spread over teleport ids PRESENT in the graph:
-        # normalizing by the raw teleport count would silently lose the
-        # 1/n share of any id absent from adj (ranks would sum < 1).
-        # Broadcast the tiny teleport set into the big side's semi-join.
-        tel_present = (
-            adj.select("id")
-            .join(F.broadcast(teleport.select("id").distinct()), "id", "left_semi")
+        # restart mass is spread over teleport ids PRESENT in the graph:
+        # normalizing by the raw teleport count would lose the share of
+        # any id absent from adj (ranks would sum < 1)
+        tel_present = adj.select("id").join(
+            F.broadcast(teleport.select("id").distinct()), "id", "left_semi"
         )
         n_src = tel_present.count()
         if n_src == 0:
             raise ValueError(
                 "personalized PageRank: teleport set is empty or disjoint from the graph"
             )
-        tel = tel_present.select("id", F.lit(1.0 / n_src).alias("t"))
-        ranks = (
-            adj.select("id")
-            .join(F.broadcast(tel), "id", "left")
-            .select("id", F.coalesce("t", F.lit(0.0)).alias("pr"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        t = F.coalesce("t", F.lit(0.0))
+        verts = verts.join(
+            F.broadcast(tel_present.select("id", F.lit(1.0 / n_src).alias("t"))),
+            "id",
+            "left",
+        ).select("id", t.alias("pr"), "out_deg", t.alias("t"))
+        restart = F.col("t")
     elif initial_ranks is not None:
-        tel = None
-        # left join onto the graph's vertex set: ranks for ids no longer
-        # in the graph are dropped, new ids start at 0.0 (they earn
-        # contribution mass on the first resumed iteration)
-        ranks = (
-            adj.select("id")
-            .join(initial_ranks.select("id", F.col("pr").cast("double").alias("pr")), "id", "left")
-            .select("id", F.coalesce("pr", F.lit(0.0)).alias("pr"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        verts = verts.join(
+            initial_ranks.select("id", F.col("pr").cast("double").alias("pr")),
+            "id",
+            "left",
+        ).select("id", F.coalesce("pr", F.lit(0.0)).alias("pr"), "out_deg")
+        restart = F.lit(1.0 / n)
     else:
-        tel = None
-        ranks = adj.select("id", F.lit(1.0).alias("pr")).persist(StorageLevel.MEMORY_AND_DISK)
+        verts = verts.select("id", F.lit(1.0).alias("pr"), "out_deg")
+        restart = F.lit(1.0 / n)
+    carried = [c for c in verts.columns if c not in ("id", "pr")]
+    # adaptive mode keeps each vertex's previous rank beside the new one,
+    # so the delta read is one pass over the new state with no join
+    prev = [F.col("pr").alias("prev")] if fixed_iterations is None else []
 
-    avg_changes: list[float] = []
-    lazy_persisted: list[DataFrame] = []  # fixed mode: materialized at the end
-    i = 0
-    limit = fixed_iterations if fixed_iterations is not None else max_iter
-    while i < limit:
-        i += 1
-        contribs = (
-            adj.join(ranks, "id")
-            .select(
-                F.explode("links").alias("id"),
-                (F.col("pr") / F.size("links")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("contrib"))
+    def update(joined: DataFrame) -> DataFrame:
+        return joined.select(
+            "id",
+            (
+                F.lit(alpha) * restart
+                + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
+            ).alias("pr"),
+            *carried,
+            *prev,
         )
-        base = adj.select("id").join(contribs, "id", "left")
-        if tel is not None:
-            new_ranks = base.join(F.broadcast(tel), "id", "left").select(
-                "id",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("t"), F.lit(0.0))
-                    + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        else:
-            new_ranks = base.select(
-                "id",
-                (
-                    F.lit(alpha) * (1.0 / n)
-                    + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        if eager_checkpoint:
-            if fixed_iterations is None:
-                # fused superstep (round 12, the pregel-harness rule):
-                # adaptive mode runs a delta action right below — marking
-                # the snapshot lazily lets that ONE action materialize
-                # the checkpoint and return the scalar, where eager +
-                # delta was two jobs and two passes per iteration
-                new_ranks = new_ranks.localCheckpoint(eager=False)
-            else:
-                # fixed mode has no per-round action; the eager
-                # checkpoint IS the round's one job
-                new_ranks = new_ranks.localCheckpoint()
-        else:
-            if i % checkpoint_every == 0:
-                new_ranks = new_ranks.localCheckpoint(eager=False)
-            new_ranks = new_ranks.persist(StorageLevel.MEMORY_AND_DISK)
 
-        if fixed_iterations is None:
-            delta = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "id")
-                .agg(F.sum(F.abs(F.col("n.pr") - F.col("o.pr"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            avg_change = (delta or 0.0) / n
-            avg_changes.append(avg_change)
-            if not eager_checkpoint:
-                ranks.unpersist()
-            ranks = new_ranks
-            if i >= min_iter and avg_change <= tol:
-                break
-        else:
-            # Fixed-iteration mode with the lazy chain (eager_checkpoint=
-            # False): no per-iteration action — persists stay lazy and the
-            # single materialization below walks the chain once. That was
-            # the measured win EARLY ON (~1.7× at sf0.1, pre-round-9b);
-            # with loop-scoped partition sizing the round-11 A/B reversed
-            # it (lazy 3.40s vs eager 2.69s fixed, 4.79 vs 3.30 adaptive —
-            # per-round materialization is a handful of tiny tasks while
-            # the chain's one materialization re-analyzes a depth-n plan),
-            # so eager is now the default; this branch remains for
-            # graphs/SFs where a caller measures the chain faster.
-            # Predecessors must stay persisted until materialization:
-            # unpersisting early would force an O(i²) recompute chain.
-            if not eager_checkpoint:
-                lazy_persisted.append(ranks)
-            ranks = new_ranks
+    def abs_delta(old: DataFrame, new: DataFrame) -> float:
+        return new.agg(F.sum(F.abs(F.col("pr") - F.col("prev")))).first()[0] or 0.0
 
-    if fixed_iterations is not None and not eager_checkpoint:
-        ranks.count()  # materialize the full chain once
-        for p in lazy_persisted:
-            p.unpersist()
-    adj.unpersist()
-    return PageRankResult(ranks=ranks, iterations=i, avg_changes=avg_changes)
+    res = pregel(
+        vertices=verts,
+        edges=adj.select(F.col("id").alias("src"), F.explode("links").alias("dst")),
+        send_to_dst=[(F.col("pr") / F.col("out_deg")).alias("contrib")],
+        agg_to_dst=[F.sum("contrib").alias("contrib")],
+        update=update,
+        n_iter=fixed_iterations,
+        min_iter=min_iter,
+        max_iter=max_iter,
+        tol=tol * n,
+        delta_metric=abs_delta,
+    )
+    return PageRankResult(
+        ranks=res.vertices.select("id", "pr"),
+        iterations=res.iterations,
+        avg_changes=[d / n for d in res.deltas],
+    )
 
 
 def top_k(ranks: DataFrame, k: int | None = None) -> DataFrame:

@@ -3,16 +3,10 @@
 The reference runs its link-analysis fixpoint as hand-rolled MapReduce
 rounds (pageRank.scala:250-371: scatter mapper, gather reducer, driver
 loop re-submitting jobs); BASELINE.json names "GraphX Pregel or RDD
-iterative" as the Spark-native re-expression. This module is that
-surface, DataFrame-first: one reusable superstep harness owning ALL the
-loop hygiene the per-algorithm loops in pagerank.py / graph.py proved
-out — pre-partitioned persisted edge frames, id-partitioned state so
-per-round joins never reshuffle the big side, lazy ``localCheckpoint``
-cadence to stop Catalyst's superlinear plan-reanalysis, persist/unpersist
-discipline, and the lazy-persist-chain single materialization for
-fixed-round mode. PageRank, HITS, and LPA re-express through it
-(tests/test_pregel.py pins result equality with the standalone
-operators and the ONE-Exchange-per-round plan shape).
+iterative" as the Spark-native re-expression. ``pregel()`` is that
+surface, DataFrame-first, and the one loop every iterative vertex
+program runs through: ``pagerank.run_pagerank`` and the ``*_pregel``
+programs below.
 
 Superstep model (Malewicz et al., "Pregel", SIGMOD 2010; GraphFrames'
 aggregateMessages API is the DataFrame analog):
@@ -31,15 +25,28 @@ aggregateMessages API is the DataFrame analog):
    or aggregate phase where it stays distributed. An update whose scalar
    action already materialized the round (a lazy ``localCheckpoint``
    driven by the scalar read) returns ``(frame, True)`` and the harness
-   skips its own checkpoint — the fused-superstep contract (round 12).
+   skips its own checkpoint.
 
-Physical contract (the reason this harness exists): edges are
-repartitioned on the send key ONCE and persisted; state is id-partitioned
-by construction every round (the aggregate's groupBy output), so the
-send join and the update join are both exchange-free and each active
-message direction costs exactly ONE Exchange per superstep — the same
-measured shape as pagerank.py's loop (plan-pinned in
-tests/test_pregel.py::test_pregel_round_single_exchange).
+Invariants:
+
+- ONE message Exchange per active direction per superstep: edges are
+  repartitioned on the send key once and persisted, so the send join
+  never reshuffles them and the per-recipient aggregate is the shuffle
+  the direction adds (tests/test_pregel.py::
+  test_pregel_round_single_exchange pins the shape over persisted
+  state). A checkpointed state reports no partitioning in Spark 4.1, so
+  AQE may also exchange or broadcast the vertex-sized state.
+- ONE action per superstep: fixed mode's eager ``localCheckpoint`` is
+  the round's action; in frontier and adaptive mode the checkpoint is
+  lazy and the round's scalar read (frontier count / delta metric)
+  materializes it; a ``(frame, True)`` update already ran it. Each
+  round's plan is a constant-size LogicalRDD. (AQE runs the action's
+  shuffle and broadcast stages as jobs of their own;
+  tests/test_pagerank.py::test_jobs_per_iteration pins the count.)
+- Loop exchanges are sized to ~50k rows per partition (floor 4, never
+  above the session setting) for the duration of the loop. Float-sum
+  combines reorder with the partition count; the declared 6dp rounding
+  absorbs that, as it absorbs DuckDB-vs-Spark summation order.
 """
 
 from __future__ import annotations
@@ -84,18 +91,20 @@ def pregel(
     max_iter: int = 50,
     tol: float | None = None,
     delta_metric: Callable[[DataFrame, DataFrame], float] | None = None,
-    checkpoint_every: int = 3,
     frontier_col: str | None = None,
-    shuffle_partitions: int | str | None = None,
-    eager_checkpoint: bool = True,
-    broadcast_state: bool | str = False,
 ) -> PregelResult:
-    """Run supersteps until ``n_iter`` rounds (fixed mode: no
-    per-round action, lazy persist chain materialized once at the end —
-    the measured ~1.7× win from pagerank.py) or until
-    ``delta_metric(old, new) <= tol`` with the min/max-round policy
-    (adaptive mode: one scalar action per round, the reference's
-    counter-read analog).
+    """Run supersteps in one of three modes:
+
+    - fixed: exactly ``n_iter`` rounds, no per-round scalar read;
+    - adaptive: until ``delta_metric(old, new) <= tol``, at least
+      ``min_iter`` and at most ``max_iter`` rounds (the reference's
+      counter-read analog); ``deltas`` records each round's metric;
+    - frontier: ``frontier_col`` names a BOOLEAN state column; each
+      superstep sends only FROM rows where it is true (the send join
+      probes the filtered frontier, so per-round message work ∝ frontier
+      out-edges), and the loop vote-halts when no vertex has it set,
+      bounded by ``n_iter``/``max_iter``; ``deltas`` records the
+      frontier size per round.
 
     ``vertices``: (id, initial state cols) — static per-vertex
     attributes (e.g. out-degree) just ride along as state the update
@@ -104,67 +113,6 @@ def pregel(
     the source (resp. dst) vertex's state columns plus the edge's own
     columns; each must carry an alias — the aggregated frame joins back
     to the state by those names.
-
-    ``frontier_col`` (round 8, judge r7 item 4 — the vote-to-halt /
-    frontier-expansion shape): name of a BOOLEAN state column; when
-    set, each superstep sends messages only FROM rows where it is
-    true (the send join's probe side is the filtered frontier, so
-    per-round message work ∝ frontier out-edges, not |E| — the same
-    property as graph.shortest_paths' bespoke loop), and the loop
-    halts as soon as no vertex has it set (every vertex voted to
-    halt), bounded by ``n_iter``/``max_iter``. The k-core deactivation
-    trick gated message VALUES on an active column but still paid the
-    full edge⨝state join every round; this gates the JOIN itself.
-    ``deltas`` records the frontier size per round.
-
-    ``shuffle_partitions`` (round 9, judge r8 item 3): pin
-    ``spark.sql.shuffle.partitions`` for the DURATION of the loop
-    (restored after — the streaming-replay precedent). Iterative loops
-    re-plan every round with the static session setting, and the
-    per-round localCheckpoint freezes whatever partition count the
-    exchanges produced — AQE's runtime coalescing can't help across
-    rounds the way it does inside one query. On a small graph that
-    means rounds × partitions tiny tasks of pure scheduling overhead
-    (measured: sf0.1 CC, 2.7k vertices — 10.3s warm at 32 partitions
-    vs 4.5s at 8). ``'auto'`` sizes from the materialized vertex/edge
-    counts (~50k rows/partition, floor 4, never above the session
-    setting — a 100 TB graph keeps its cluster-sized exchanges; only
-    provably small loops shrink). Round 9b extends it to the FLOAT-SUM
-    combines (pagerank/HITS) too: partial-agg merge order is already
-    nondeterministic run-to-run (reduce-side fetch order) and the
-    oracle is a different engine (DuckDB) summing in its own order, so
-    the declared 6dp rounding must — and does — absorb ulp-level
-    reorder regardless of partition count; changing the count moves
-    sums within that same already-tolerated class. Validated
-    empirically: pagerank/HITS hashes stable across repeated runs at
-    all three SFs (see SCALING.md round-9b note).
-
-    ``eager_checkpoint`` / ``broadcast_state`` (round 11, judge r10
-    item 7 — the SCC loop's two levers offered as harness flags):
-    eager mode replaces the per-round persist with an eager
-    ``localCheckpoint`` — every round's state is a materialized
-    LogicalRDD with a constant-size plan, the discipline the bespoke
-    loops (SCC, near_dup_components) use. It is now the DEFAULT: the
-    round-11 A/B measured it a win for EVERY algorithm on the harness
-    (same-tree warm best-of-3 at sf0.1, values bit-identical —
-    pagerank 6.52→3.05s, hits 4.49→3.54, sssp 3.20→2.25, cc
-    2.86→2.50, lpa 2.45→2.05, bfs 1.86→1.45, kcore 1.47→1.23),
-    superseding the early-round "lazy persist chain, one
-    materialization" doctrine — with the round-9b loop-scoped
-    partition sizing, per-round materialization is cheap while the
-    lazy chain's single materialization re-analyzes a depth-n_iter
-    plan. Pass ``eager_checkpoint=False`` to restore the lazy chain.
-    ``broadcast_state`` wraps the vertex-scale frames (the sending
-    state and the aggregated message frames) in an explicit
-    ``F.broadcast`` — checkpointed frames have unknown stats, so AQE
-    never auto-broadcasts them and each round's joins sort/shuffle
-    sides a hash join wouldn't touch. ``'auto'`` enables it when the
-    vertex count is ≤ 100k (the SCC threshold). Broadcasting an
-    UNMATERIALIZED lazy-persist chain re-executes it per broadcast
-    build — the round-10 measured O(i²) loss — so broadcast_state
-    forces eager_checkpoint on. (On hits at this SF the broadcast
-    measured a small loss — per-round broadcast-build sub-jobs — and
-    stays off by default.)
     """
     if update is None:
         raise ValueError("pregel: update callable is required")
@@ -186,254 +134,99 @@ def pregel(
             f"pregel: frontier_col {frontier_col!r} is not a vertex state column"
         )
 
-    state = vertices.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
+    init = state = vertices.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
     n_verts = state.count()
     e_by_src = e_by_dst = None
     n_edges = 0
     if send_to_dst is not None:
         e_by_src = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = max(n_edges, e_by_src.count())
+        n_edges = e_by_src.count()
     if send_to_src is not None:
         e_by_dst = edges.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
-        # both directions repartition the SAME edges frame, so their
-        # counts are equal — the dual-direction (HITS) setup paid a
-        # whole second count job for a number it already had (round 12);
-        # the persisted re-lay materializes inside round 1's job instead
+        # both directions re-lay the same edges, so one count serves;
+        # the dst re-lay then materializes inside round 1's job
         if e_by_src is None:
             n_edges = e_by_dst.count()
 
     spark = vertices.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        # ~50k rows per exchange partition, floor 4, capped at the
-        # session setting: small loops stop paying rounds × partitions
-        # empty-task overhead, big graphs keep their cluster sizing
-        loop_parts = min(session_parts, max(4, max(n_verts, n_edges) // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = None
-
-    # Pin-only, no input re-lay: re-laying the persisted state/edge
-    # caches at loop_parts before the loop was measured a NET LOSS
-    # (sf0.1, warm best-of-2: pagerank_pregel 5.9s relaid vs 4.0s
-    # pin-only; hits_pregel 7.5s vs 6.3s) — the two repartition+persist
-    # passes cost more than the per-round small-side exchange they
-    # remove, because the loop's expensive side (the persisted edges)
-    # is joined cache-resident either way and only the aggregated
-    # message frame re-shuffles at the pinned count.
-
-    if broadcast_state == "auto":
-        broadcast_state = n_verts <= 100_000
-    if broadcast_state:
-        eager_checkpoint = True  # see docstring: never broadcast a lazy chain
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
-
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    loop_parts = min(int(session_parts), max(4, max(n_verts, n_edges) // 50_000 + 1))
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     deltas: list[float] = []
-    lazy_persisted: list[DataFrame] = []
     i = 0
     limit = n_iter if n_iter is not None else max_iter
-    if loop_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        return _pregel_loop(
-            state, e_by_src, e_by_dst, send_to_dst, agg_to_dst, send_to_src,
-            agg_to_src, update, n_iter, min_iter, tol, delta_metric,
-            checkpoint_every, frontier_col, deltas, lazy_persisted, i, limit,
-            eager_checkpoint, bcast,
-        )
+        while i < limit:
+            i += 1
+            # frontier mode: only frontier rows PROBE the edge table, so
+            # the send join shrinks with the frontier
+            sender = (
+                state.filter(F.col(frontier_col)) if frontier_col is not None else state
+            )
+            joined = state
+            if send_to_dst is not None:
+                msgs = (
+                    e_by_src.join(sender.withColumnRenamed("id", "src"), "src")
+                    .select(F.col("dst").alias("id"), *send_to_dst)
+                )
+                joined = joined.join(_aggregate(msgs, agg_to_dst), "id", "left")
+            if send_to_src is not None:
+                msgs = (
+                    e_by_dst.join(sender.withColumnRenamed("id", "dst"), "dst")
+                    .select(F.col("src").alias("id"), *send_to_src)
+                )
+                joined = joined.join(_aggregate(msgs, agg_to_src), "id", "left")
+            upd = update(joined)
+            new_state, pre_materialized = (
+                upd if isinstance(upd, tuple) else (upd, False)
+            )
+            if pre_materialized:
+                pass  # the update's scalar read was this round's action
+            elif frontier_col is not None or n_iter is None:
+                # the scalar read below materializes it: one action per round
+                new_state = new_state.localCheckpoint(eager=False)
+            else:
+                new_state = new_state.localCheckpoint()  # the round's action
+
+            if frontier_col is not None:
+                n_front = new_state.filter(F.col(frontier_col)).count()
+                deltas.append(float(n_front))
+                state = new_state
+                if n_front == 0:
+                    break
+            elif n_iter is None:
+                d = delta_metric(state, new_state)
+                deltas.append(d)
+                state = new_state
+                if i >= min_iter and d <= tol:
+                    break
+            else:
+                state = new_state
     finally:
-        if loop_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
+        spark.conf.set("spark.sql.shuffle.partitions", session_parts)
         for e in (e_by_src, e_by_dst):
             if e is not None:
                 e.unpersist()
-
-
-def _pregel_loop(
-    state, e_by_src, e_by_dst, send_to_dst, agg_to_dst, send_to_src,
-    agg_to_src, update, n_iter, min_iter, tol, delta_metric,
-    checkpoint_every, frontier_col, deltas, lazy_persisted, i, limit,
-    eager_checkpoint=False, bcast=None,
-):
-    """The superstep loop proper — split out so the shuffle-partition
-    pin and the persisted-edge cleanup are exception-safe (finally in
-    the wrapper) without indenting the whole loop."""
-    if bcast is None:
-        bcast = lambda df: df
-    while i < limit:
-        i += 1
-        # frontier mode: only frontier rows PROBE the edge table; the
-        # filter preserves the id-partitioning, so the join stays
-        # exchange-free and shrinks with the frontier
-        sender = (
-            state.filter(F.col(frontier_col)) if frontier_col is not None else state
-        )
-        joined = state
-        if send_to_dst is not None:
-            msgs = (
-                e_by_src.join(bcast(sender.withColumnRenamed("id", "src")), "src")
-                .select(F.col("dst").alias("id"), *send_to_dst)
-            )
-            joined = joined.join(bcast(_aggregate(msgs, agg_to_dst)), "id", "left")
-        if send_to_src is not None:
-            msgs = (
-                e_by_dst.join(bcast(sender.withColumnRenamed("id", "dst")), "dst")
-                .select(F.col("src").alias("id"), *send_to_src)
-            )
-            joined = joined.join(bcast(_aggregate(msgs, agg_to_src)), "id", "left")
-        upd = update(joined)
-        # fused-superstep contract (round 12, judge r11 item 1): an
-        # update that already ran the round's one action over a lazily
-        # checkpointed frame (HITS' mass read) returns (frame, True) —
-        # the frame is a cheap projection over that materialized
-        # LogicalRDD, so checkpointing it AGAIN was a whole second job
-        # per superstep that re-read the persisted blocks to write them
-        # back unchanged.
-        new_state, pre_materialized = (
-            upd if isinstance(upd, tuple) else (upd, False)
-        )
-        if eager_checkpoint:
-            if pre_materialized:
-                pass  # update's scalar action was this round's job
-            elif frontier_col is not None or n_iter is None:
-                # fused superstep (round 12): mark the snapshot lazily —
-                # the scalar read below (frontier count / delta metric)
-                # is ONE job that both materializes every partition of
-                # the checkpoint and returns the scalar, where eager +
-                # count was two jobs and two passes per round. The plan
-                # is a LogicalRDD either way (constant size).
-                new_state = new_state.localCheckpoint(eager=False)
-            else:
-                # fixed mode has no scalar read; the eager checkpoint IS
-                # the round's one action (the bespoke-loop discipline)
-                new_state = new_state.localCheckpoint()
-        else:
-            if i % checkpoint_every == 0:
-                new_state = new_state.localCheckpoint(eager=False)
-            new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
-
-        if frontier_col is not None:
-            # one scalar action per round (materializes the persisted
-            # state as a side effect); empty frontier = unanimous halt
-            n_front = new_state.filter(F.col(frontier_col)).count()
-            deltas.append(float(n_front))
-            if not eager_checkpoint:
-                state.unpersist()
-            state = new_state
-            if n_front == 0:
-                break
-        elif n_iter is None:
-            d = delta_metric(state, new_state)
-            deltas.append(d)
-            if not eager_checkpoint:
-                state.unpersist()
-            state = new_state
-            if i >= min_iter and d <= tol:
-                break
-        else:
-            # fixed mode: predecessors stay persisted until the single
-            # materialization below (unpersisting early would force an
-            # O(i²) recompute chain — pagerank.py's measured lesson);
-            # eager mode has no chain — each round is already a snapshot
-            if not eager_checkpoint:
-                lazy_persisted.append(state)
-            state = new_state
-
-    if n_iter is not None and frontier_col is None and not eager_checkpoint:
-        # materialized HERE, inside the pinned-partitions scope: the
-        # wrapper's finally restores the session setting only after
-        # every kept state is a cached/checkpointed snapshot
-        state.count()
-        for p in lazy_persisted:
-            p.unpersist()
+        if state is not init:
+            init.unpersist()  # every round's state is its own snapshot
     return PregelResult(vertices=state, iterations=i, deltas=deltas)
 
 
 # --------------------------------------------------------------------------
-# The three reference-family algorithms re-expressed through the harness.
-# Each is RESULT-IDENTICAL (6dp) to its standalone operator — pinned in
-# tests/test_pregel.py — and exists so users get one surface for custom
-# vertex programs instead of five parallel loops.
+# Vertex programs over the harness. Each returns the same rows as its
+# declared bespoke twin (pinned in tests/test_pregel.py).
 # --------------------------------------------------------------------------
 
 
-def pagerank_pregel(
-    adj: DataFrame,
-    alpha: float = 0.15,
-    n_iter: int = 10,
-    checkpoint_every: int = 3,
-    shuffle_partitions: int | str | None = "auto",
-) -> DataFrame:
-    """The reference PageRank (pageRank.scala:294,310 — pr' = α/N +
-    (1−α)·Σ pr(w)/outdeg(w)) as a pregel vertex program: vertices carry
-    (pr, out_deg); each superstep sends pr/out_deg along out-edges, sums
-    per recipient, and damps. Dangling vertices (empty/NULL links) send
-    nothing — identical mass semantics to run_pagerank's explode
-    scatter. Returns (id, pr), same values as
-    pagerank.run_pagerank(adj, fixed_iterations=n_iter)."""
-    n = adj.count()
-    verts = adj.select(
-        "id",
-        F.lit(1.0).alias("pr"),
-        F.size("links").cast("double").alias("out_deg"),
-    )
-    edges = adj.select(F.col("id").alias("src"), F.explode("links").alias("dst"))
-
-    def update(joined: DataFrame) -> DataFrame:
-        return joined.select(
-            "id",
-            (
-                F.lit(alpha) * (1.0 / n)
-                + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("pr"),
-            "out_deg",
-        )
-
-    res = pregel(
-        vertices=verts,
-        edges=edges,
-        send_to_dst=[(F.col("pr") / F.col("out_deg")).alias("contrib")],
-        agg_to_dst=[F.sum("contrib").alias("contrib")],
-        update=update,
-        n_iter=n_iter,
-        checkpoint_every=checkpoint_every,
-        shuffle_partitions=shuffle_partitions,  # float-sum reorder absorbed by 6dp round
-    )
-    return res.vertices.select("id", "pr")
-
-
-def hits_pregel(
-    edges: DataFrame,
-    n_iter: int = 8,
-    shuffle_partitions: int | str | None = "auto",
-) -> DataFrame:
+def hits_pregel(edges: DataFrame, n_iter: int = 8) -> DataFrame:
     """HITS through pregel: both message directions active in one
     superstep (hub mass flows src→dst into authority, authority flows
     dst→src into hub); the L1 normalization is the update phase's one
-    scalar action — graph.hits's loop, same values at 6dp.
-
-    Runs the harness in EAGER mode (round 11): the mass read already
-    materializes every round, so the lazy persist chain buys nothing
-    here and the per-round eager checkpoint keeps each round's plan
-    constant-size — measured 4.49 → 3.54s warm on the benched slice,
-    values bit-identical. broadcast_state on top measured a small LOSS
-    (3.96s: per-round broadcast-build sub-jobs outweigh the join win
-    at this graph size) and stays off.
-
-    Round 12 (judge r11 item 1 — fuse the per-superstep actions): the
-    update returns ``(frame, True)``: its mass read is the ONE action of
-    the round (it materializes the lazily checkpointed raw frame), and
-    the returned state is a constant-size projection over that
-    LogicalRDD — the harness's second per-round job (re-checkpointing
-    the projection) is gone. One job per superstep instead of two; the
-    normalization arithmetic is unchanged (same h_raw/hm division, now
-    evaluated from the persisted raw blocks at each use)."""
-    # snapshot the distinct edge set ONCE (round 12): it feeds the node
-    # derivation, the vertex-state materialization and BOTH directional
-    # re-lays — un-checkpointed, the select+filter+distinct chain was
-    # recomputed by each of those four jobs (the components_pregel sym
-    # lesson applied to the dual-direction setup)
+    scalar action — graph.hits's loop, same values at 6dp. The update
+    returns ``(frame, True)``: its mass read materializes the lazily
+    checkpointed raw frame, so the round costs one job."""
+    # snapshot the distinct edge set ONCE: it feeds the node derivation,
+    # the vertex-state materialization and BOTH directional re-lays
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -483,8 +276,6 @@ def hits_pregel(
         agg_to_src=[F.sum("h_msg").alias("h_raw")],
         update=update,
         n_iter=n_iter,
-        shuffle_partitions=shuffle_partitions,  # float-sum reorder absorbed by 6dp round
-        eager_checkpoint=True,  # per-round mass read materializes anyway
     )
     return res.vertices.select(
         "id", F.round("hub", 6).alias("hub"), F.round("authority", 6).alias("authority")
@@ -542,8 +333,6 @@ def k_core_pregel(edges: DataFrame, k: int = 2, max_iter: int = 10) -> DataFrame
         max_iter=max_iter,
         tol=0.0,
         delta_metric=flips,
-        checkpoint_every=1,
-        shuffle_partitions="auto",  # int-count combine: partition-insensitive
     )
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(
@@ -602,8 +391,6 @@ def bfs_pregel(edges: DataFrame, source, max_hops: int = 10) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_hops,
-        checkpoint_every=1,  # the bespoke loop checkpoints every round
-        shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     return res.vertices.filter(F.col("dist").isNotNull()).select("id", "dist")
 
@@ -653,8 +440,6 @@ def sssp_pregel(edges: DataFrame, source, max_rounds: int = 10) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_rounds,
-        checkpoint_every=1,
-        shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     return res.vertices.filter(F.col("dist").isNotNull()).select("id", "dist")
 
@@ -743,8 +528,6 @@ def components_pregel(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_iter,
-        checkpoint_every=1,  # labels referenced twice per round
-        shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     if res.deltas and res.deltas[-1] > 0:
         raise RuntimeError(
@@ -791,8 +574,5 @@ def label_propagation_pregel(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         agg_to_dst=vote,
         update=update,
         n_iter=n_iter,
-        checkpoint_every=1,  # the standalone loop checkpoints every round
-        shuffle_partitions="auto",  # count + deterministic top-1 window:
-        # partition-insensitive (int counts, total tie-break order)
     )
     return res.vertices.select("id", "label")

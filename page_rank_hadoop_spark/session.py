@@ -15,6 +15,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the package: Python workers import it by name
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -42,6 +44,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.debug.maxToStringFields", "200")
+        # Arrow/pandas UDF workers run in their own processes, which see
+        # neither the driver's sys.path nor its working directory
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         # 10MB (Spark's default) measured better than 64MB here: the dedup
         # self-joins' shingle/band tables fall under a bigger threshold and
         # the driver-side hashed-relation build is slower + GC-noisier than

@@ -6,6 +6,8 @@ scatter conserves mass, so total rank follows the exact recurrence
 as the reference's formula (pageRank.scala:310).
 """
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,30 +87,41 @@ def _count_shuffles(node) -> int:
     return c
 
 
-def test_iteration_single_exchange(spark, adj):
-    """Scale pin (judge r1 #4): with the adjacency id-partitioned and
-    persisted once, ONE PageRank iteration shuffles exactly once — the
-    contribs gather groupBy. Neither join reshuffles the adjacency."""
-    from pyspark.storagelevel import StorageLevel
+_GROUPS = itertools.count()
 
-    adj_p = adj.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = adj_p.count()
-    ranks = adj_p.select("id", F.lit(1.0).alias("pr")).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    contribs = (
-        adj_p.join(ranks, "id")
-        .select(F.explode("links").alias("id"), (F.col("pr") / F.size("links")).alias("contrib"))
-        .groupBy("id")
-        .agg(F.sum("contrib").alias("contrib"))
-    )
-    new_ranks = adj_p.select("id").join(contribs, "id", "left").select(
-        "id", (F.lit(0.15) / n + 0.85 * F.coalesce("contrib", F.lit(0.0))).alias("pr")
-    )
-    new_ranks.count()
-    n_shuffles = _count_shuffles(new_ranks._jdf.queryExecution().executedPlan())
-    assert n_shuffles == 1, new_ranks._jdf.queryExecution().executedPlan().toString()
-    adj_p.unpersist()
-    ranks.unpersist()
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, read from statusTracker under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"test-pagerank-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("mode, per_round", [("fixed", 5), ("adaptive", 6)])
+def test_jobs_per_iteration(spark, adj, mode, per_round):
+    """Pins the jobs that rounds 6 and 7 each add on the tiny graph
+    (steady state). A fixed round is the checkpoint's query: its
+    shuffle and broadcast stages run as jobs of their own under AQE. An
+    adaptive round adds one job, the Σ|Δpr| read that also materializes
+    the round's lazy checkpoint. A change that adds a job per round
+    fails here."""
+
+    def run(k):
+        if mode == "fixed":
+            return _jobs(spark, lambda: pagerank.run_pagerank(adj, fixed_iterations=k))
+        # the tiny graph converges at once, so the loop stops at min_iter
+        return _jobs(
+            spark, lambda: pagerank.run_pagerank(adj, min_iter=k, max_iter=k)
+        )
+
+    jobs = [run(k) for k in (5, 6, 7)]
+    assert [b - a for a, b in zip(jobs, jobs[1:])] == [per_round, per_round]
 
 
 def test_topk_ordering(adj):

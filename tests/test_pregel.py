@@ -1,19 +1,16 @@
 """Pregel harness pins (VERDICT r6 item 4): the generic superstep
-surface must reproduce the bespoke loops EXACTLY — PageRank via
-pregel() == run_pagerank (same oracle), HITS and LPA via pregel() ==
-their graph.py twins — and keep the measured loop hygiene: one active
-message direction costs exactly ONE Exchange per superstep (the
-pagerank.py partitioning argument, re-proven for the edge-list form).
+surface must reproduce the bespoke loops EXACTLY — HITS and LPA via
+pregel() == their graph.py twins — and keep the measured loop hygiene:
+one active message direction costs exactly ONE Exchange per superstep.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from page_rank_hadoop_spark.operators import graph, pagerank
+from page_rank_hadoop_spark.operators import graph
 from page_rank_hadoop_spark.operators.pregel import (
     hits_pregel,
     label_propagation_pregel,
-    pagerank_pregel,
     pregel,
 )
 from page_rank_hadoop_spark.sources.corpus import parse_corpus_lines
@@ -44,33 +41,6 @@ def kept_edges(spark):
     edges = parsed.select(F.col("title").alias("src"), F.explode("links").alias("dst"))
     verts = parsed.select(F.col("title").alias("id")).distinct()
     return graph.resolve_edges(edges, verts)
-
-
-def test_pagerank_pregel_matches_run_pagerank(adj):
-    """Same formula, same rounds, same dangling-mass semantics — values
-    equal at 9dp (summation order inside one engine's groupBy is already
-    nondeterministic, so exact-bit equality is not the contract; the
-    shared 6dp oracle is)."""
-    want = {
-        r["id"]: r["pr"]
-        for r in pagerank.run_pagerank(adj, fixed_iterations=10).ranks.collect()
-    }
-    got = {r["id"]: r["pr"] for r in pagerank_pregel(adj, n_iter=10).collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-9)
-
-
-def test_pagerank_pregel_one_iteration_formula(adj):
-    """One superstep from uniform pr=1 reproduces the reference formula
-    exactly (the test_fixed_point_formula twin, via the harness)."""
-    got = {r["id"]: r["pr"] for r in pagerank_pregel(adj, n_iter=1).collect()}
-    a, n = 0.15, 4
-    base = a / n
-    assert got["1"] == pytest.approx(base + 0.85 * (1.0 + 1.0 / 3))
-    assert got["2"] == pytest.approx(base + 0.85 * (0.5 + 1.0 / 3))
-    assert got["4"] == pytest.approx(base + 0.85 * (0.5 + 1.0 / 3))
-    assert got["NULL"] == pytest.approx(base + 0.85 * 1.0)
 
 
 def test_hits_pregel_matches_hits(kept_edges):
@@ -136,8 +106,7 @@ def test_pregel_round_single_exchange(spark, adj):
     """The harness's physical contract, proven for the edge-list form:
     edges persisted partitioned by src + state id-partitioned ⇒ the send
     join and the update join are exchange-free and ONE superstep
-    shuffles exactly once (the per-recipient message aggregate) — the
-    same shape test_pagerank.py pins for the adjacency-list loop."""
+    shuffles exactly once (the per-recipient message aggregate)."""
     from pyspark.storagelevel import StorageLevel
 
     edges = (

@@ -537,9 +537,9 @@ def test_pregel_pagerank_mass_recurrence_random_graphs(spark, edges, n_iter):
     vertices get a self-loop), total rank after k pregel supersteps
     follows the exact recurrence S_k = α + (1−α)·S_{k−1} from S_0 = N —
     the mass-conservation invariant of the scatter, independent of
-    topology (test_pagerank.test_mass_recurrence generalized to the
-    harness over random graphs)."""
-    from page_rank_hadoop_spark.operators.pregel import pagerank_pregel
+    topology (test_pagerank.test_mass_recurrence generalized to random
+    graphs)."""
+    from page_rank_hadoop_spark.operators.pagerank import run_pagerank
 
     verts = sorted({v for e in edges for v in e})
     adj_map = {v: sorted({d for s, d in edges if s == v}) or [v] for v in verts}
@@ -549,7 +549,8 @@ def test_pregel_pagerank_mass_recurrence_random_graphs(spark, edges, n_iter):
     )
     n = len(verts)
     total = sum(
-        r["pr"] for r in pagerank_pregel(adj, n_iter=n_iter).collect()
+        r["pr"]
+        for r in run_pagerank(adj, fixed_iterations=n_iter).ranks.collect()
     )
     expect = float(n)
     for _ in range(n_iter):

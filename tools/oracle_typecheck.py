@@ -21,6 +21,7 @@ Runs DuckDB-side always; Spark-side schema via a shared local session.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -79,7 +80,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from page_rank_hadoop_spark import get_spark
 

@@ -34,7 +34,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -205,16 +205,17 @@ def rehearse_graph(spark, verts, kept, label: str) -> dict:
 
 
 def rehearse_pregel(spark, verts, kept, label: str) -> dict:
-    """Harness-vs-bespoke parity at rehearsal scale (round 7): PageRank
-    and HITS through operators/pregel.py against their hand-rolled
-    loops on the SAME persisted inputs. The claim under test is that
-    the generic superstep surface adds no per-round scale cost — same
-    exchange count per round (plan-pinned in tests), so wall time must
-    track the bespoke loop at both 1× and 10×."""
+    """Harness-vs-bespoke parity at rehearsal scale (round 7): HITS
+    through operators/pregel.py against its hand-rolled loop on the
+    SAME persisted inputs, plus PageRank (which runs on the harness).
+    The claim under test is that the generic superstep surface adds no
+    per-round scale cost — same exchange count per round (plan-pinned
+    in tests), so wall time must track the bespoke loop at both 1× and
+    10×."""
     from pyspark.storagelevel import StorageLevel
 
     from page_rank_hadoop_spark.operators import graph, pagerank
-    from page_rank_hadoop_spark.operators.pregel import hits_pregel, pagerank_pregel
+    from page_rank_hadoop_spark.operators.pregel import hits_pregel
 
     verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
     kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
@@ -222,9 +223,7 @@ def rehearse_pregel(spark, verts, kept, label: str) -> dict:
     adj = graph.adjacency(kept, verts).persist(StorageLevel.MEMORY_AND_DISK)
     adj.count()
     _, t = _timed(lambda: pagerank.run_pagerank(adj, fixed_iterations=10).ranks.count())
-    r["pr_bespoke_sec"] = t
-    _, t = _timed(lambda: pagerank_pregel(adj, n_iter=10).count())
-    r["pr_pregel_sec"] = t
+    r["pr_sec"] = t
     _, t = _timed(lambda: graph.hits(kept, n_iter=8).count())
     r["hits_bespoke_sec"] = t
     _, t = _timed(lambda: hits_pregel(kept, n_iter=8).count())
@@ -1258,8 +1257,7 @@ def main() -> int:
             [
                 ("verts", "verts"),
                 ("edges", "edges"),
-                ("pr_bespoke_sec", "PR bespoke s"),
-                ("pr_pregel_sec", "PR pregel s"),
+                ("pr_sec", "PR s"),
                 ("hits_bespoke_sec", "HITS bespoke s"),
                 ("hits_pregel_sec", "HITS pregel s"),
             ],

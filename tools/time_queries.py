@@ -21,7 +21,7 @@ def main() -> int:
         print("usage: time_queries.py [sf_dir] q_name ...", file=sys.stderr)
         return 2
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from page_rank_hadoop_spark import get_spark
     from page_rank_hadoop_spark.plans import registry

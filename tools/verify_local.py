@@ -11,10 +11,13 @@ normalized). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _norm_cell(v):
@@ -51,7 +54,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
     from page_rank_hadoop_spark import get_spark
 
